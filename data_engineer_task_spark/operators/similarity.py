@@ -388,41 +388,46 @@ def kmeans_fit(
     base = emb.select(
         id_col, as_double(F.col(vec_col)).alias("_v")
     ).persist()
-    init = base.orderBy(id_col).limit(k).collect()
-    if len(init) < k:
-        raise ValueError(f"need >= {k} vectors, got {len(init)}")
-    dim = len(init[0]["_v"])
-    centroids = [
-        [_round_half_away_scalar(float(x), round_to) for x in r["_v"]]
-        for r in init
-    ]
-    for _ in range(n_iters):
-        assigned = _assign_to_centroids(base, centroids, round_to=round_to)
-        rows = (
-            assigned.groupBy("cluster")
-            .agg(*[F.avg(F.element_at("_v", d + 1)).alias(f"c{d}") for d in range(dim)])
-            .collect()
-        )
-        new = {
-            r["cluster"]: [
-                _round_half_away_scalar(float(r[f"c{d}"]), round_to)
-                for d in range(dim)
-            ]
-            for r in rows
-        }
-        updated = [new.get(c, centroids[c]) for c in range(k)]
-        if updated == centroids:
-            # Rounded fixpoint: every further iteration is a no-op, so
-            # stopping changes nothing but the job count.
-            break
-        centroids = updated
-    final = _assign_to_centroids(base, centroids, round_to=round_to)
-    # The cache served its purpose (one scan per iteration); release
-    # it so repeated fits don't pin corpus copies for the session
-    # lifetime. Consuming `final` re-reads the source once —
-    # deterministic, and cheaper than a leaked cache under pressure.
-    base.unpersist(blocking=False)
-    return centroids, final
+    try:
+        init = base.orderBy(id_col).limit(k).collect()
+        if len(init) < k:
+            raise ValueError(f"need >= {k} vectors, got {len(init)}")
+        dim = len(init[0]["_v"])
+        centroids = [
+            [_round_half_away_scalar(float(x), round_to) for x in r["_v"]]
+            for r in init
+        ]
+        for _ in range(n_iters):
+            assigned = _assign_to_centroids(base, centroids, round_to=round_to)
+            rows = (
+                assigned.groupBy("cluster")
+                .agg(
+                    *[F.avg(F.element_at("_v", d + 1)).alias(f"c{d}") for d in range(dim)]
+                )
+                .collect()
+            )
+            new = {
+                r["cluster"]: [
+                    _round_half_away_scalar(float(r[f"c{d}"]), round_to)
+                    for d in range(dim)
+                ]
+                for r in rows
+            }
+            updated = [new.get(c, centroids[c]) for c in range(k)]
+            if updated == centroids:
+                # Rounded fixpoint: every further iteration is a no-op, so
+                # stopping changes nothing but the job count.
+                break
+            centroids = updated
+        final = _assign_to_centroids(base, centroids, round_to=round_to)
+        return centroids, final
+    finally:
+        # The cache served its purpose (one scan per iteration); release
+        # it — on the error paths too — so repeated fits don't pin
+        # corpus copies for the session lifetime. Consuming `final`
+        # re-reads the source once — deterministic, and cheaper than a
+        # leaked cache under pressure.
+        base.unpersist(blocking=False)
 
 
 def ivf_assign(
@@ -635,57 +640,58 @@ def pq_fit(
     early-stop therefore returns exactly what the sequential loop
     did). Jobs: 1 + n_iters, down from m·(1 + n_iters)."""
     base = emb.select(id_col, as_double(F.col(vec_col)).alias("_v")).persist()
-    init = base.orderBy(id_col).limit(k).collect()
-    if len(init) < k:
-        raise ValueError(f"need >= {k} vectors, got {len(init)}")
-    dim = len(init[0]["_v"])
-    if dim % m != 0:
-        base.unpersist(blocking=False)
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    codebooks = [
-        [
+    try:
+        init = base.orderBy(id_col).limit(k).collect()
+        if len(init) < k:
+            raise ValueError(f"need >= {k} vectors, got {len(init)}")
+        dim = len(init[0]["_v"])
+        if dim % m != 0:
+            raise ValueError(f"dim {dim} not divisible by m={m}")
+        dsub = dim // m
+        codebooks = [
             [
-                _round_half_away_scalar(float(x), round_to)
-                for x in r["_v"][j * dsub : (j + 1) * dsub]
-            ]
-            for r in init
-        ]
-        for j in range(m)
-    ]
-    for _ in range(n_iters):
-        codes = _pq_codes_udf(codebooks, round_to)
-        rows = (
-            base.select("_v", F.posexplode(codes(F.col("_v"))).alias("_j", "_cl"))
-            .groupBy("_j", "_cl")
-            .agg(
-                *[
-                    F.avg(
-                        F.element_at("_v", F.col("_j") * dsub + d + 1)
-                    ).alias(f"c{d}")
-                    for d in range(dsub)
+                [
+                    _round_half_away_scalar(float(x), round_to)
+                    for x in r["_v"][j * dsub : (j + 1) * dsub]
                 ]
-            )
-            .collect()
-        )
-        new = {
-            (r["_j"], r["_cl"]): [
-                _round_half_away_scalar(float(r[f"c{d}"]), round_to)
-                for d in range(dsub)
+                for r in init
             ]
-            for r in rows
-        }
-        updated = [
-            [new.get((j, c), codebooks[j][c]) for c in range(k)]
             for j in range(m)
         ]
-        if updated == codebooks:
-            # Rounded fixpoint in every subspace: further iterations
-            # are no-ops (same early-stop rule as kmeans_fit).
-            break
-        codebooks = updated
-    base.unpersist(blocking=False)
-    return codebooks
+        for _ in range(n_iters):
+            codes = _pq_codes_udf(codebooks, round_to)
+            rows = (
+                base.select("_v", F.posexplode(codes(F.col("_v"))).alias("_j", "_cl"))
+                .groupBy("_j", "_cl")
+                .agg(
+                    *[
+                        F.avg(
+                            F.element_at("_v", F.col("_j") * dsub + d + 1)
+                        ).alias(f"c{d}")
+                        for d in range(dsub)
+                    ]
+                )
+                .collect()
+            )
+            new = {
+                (r["_j"], r["_cl"]): [
+                    _round_half_away_scalar(float(r[f"c{d}"]), round_to)
+                    for d in range(dsub)
+                ]
+                for r in rows
+            }
+            updated = [
+                [new.get((j, c), codebooks[j][c]) for c in range(k)]
+                for j in range(m)
+            ]
+            if updated == codebooks:
+                # Rounded fixpoint in every subspace: further iterations
+                # are no-ops (same early-stop rule as kmeans_fit).
+                break
+            codebooks = updated
+        return codebooks
+    finally:
+        base.unpersist(blocking=False)
 
 
 def pq_encode(

@@ -26,11 +26,12 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.gender import gender_lookup_df, with_gender
 from ..functions.names import with_name_parts
 from ..operators.normalize import explode_multivalue, surrogate_key
-from ..schemas import SHOWS_RAW
+from ..schemas import SHOWS_RAW, STAR_SCHEMA
 from ..sources.csv import read_csv
 from ..sources.ledger import Ledger
 from ..sources.parquet import write_parquet
@@ -38,6 +39,15 @@ from ..sources.parquet import write_parquet
 
 def _ingest_digest(name: str) -> str:
     return hashlib.md5(name.encode()).hexdigest()[:12]
+
+
+def _warehouse_schema(name: str) -> T.StructType:
+    """The declared columns of a star table plus the ``_ingest``
+    provenance column ``NetflixPipeline.load`` appends — exactly what
+    the pipeline writes, so a read never needs to infer it."""
+    return T.StructType(
+        list(STAR_SCHEMA[name].fields) + [T.StructField("_ingest", T.StringType(), True)]
+    )
 
 
 @dataclass
@@ -198,8 +208,11 @@ class NetflixPipeline:
     def table(self, name: str) -> DataFrame:
         """All ingest slices of a star table (recursive read — the
         slice dirs are plain nesting, not partition columns; provenance
-        travels in the ``_ingest`` data column instead)."""
+        travels in the ``_ingest`` data column instead). The pipeline
+        wrote these files, so they are read with their declared schema:
+        parquet schema inference would cost one Spark job per read."""
         return (
-            self.spark.read.option("recursiveFileLookup", "true")
+            self.spark.read.schema(_warehouse_schema(name))
+            .option("recursiveFileLookup", "true")
             .parquet(f"{self.warehouse}/{name}")
         )

@@ -28,6 +28,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators.sketch import (
     hll_estimate,
@@ -37,7 +38,17 @@ from ..operators.sketch import (
     kmv_merge,
     kmv_sketch,
 )
+from ..session import local_frame
 from ..sources.ledger import Ledger
+
+# The config stamp's columns, in ``SketchRollup._config`` order.
+_CONFIG_SCHEMA = T.StructType(
+    [
+        T.StructField("group_cols", T.StringType(), False),
+        T.StructField("value_col", T.StringType(), False),
+        T.StructField("k", T.LongType(), False),
+    ]
+)
 
 
 def _slug(name: str) -> str:
@@ -112,12 +123,11 @@ class SketchRollup:
         path = os.path.join(self.state_dir, "config")
         if not self._config_exists(path):
             if stamp:
-                self.spark.createDataFrame(
-                    [tuple(self._config().values())],
-                    list(self._config().keys()),
+                local_frame(
+                    self.spark, [tuple(self._config().values())], _CONFIG_SCHEMA
                 ).coalesce(1).write.mode("overwrite").parquet(path)
             return
-        row = self.spark.read.parquet(path).collect()[0].asDict()
+        row = self.spark.read.schema(_CONFIG_SCHEMA).parquet(path).collect()[0].asDict()
         mine = self._config()
         if {k: row[k] for k in mine} != mine:
             raise ValueError(

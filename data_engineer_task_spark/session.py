@@ -14,7 +14,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -71,3 +72,14 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A small driver-side constant frame (lookup table, ledger row,
+    config stamp) that stays in the JVM. With Arrow on (as
+    ``get_spark`` sets it) the pandas route plans as ``LocalTableScan``;
+    ``createDataFrame(row list)`` plans as ``Scan ExistingRDD`` over a
+    Python RDD, so every task that reads it starts a Python worker."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.fieldNames()), schema)

@@ -14,10 +14,11 @@ not in this image, stubbed at the format layer) — the API here stays.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..schemas import HISTORY
+from ..session import local_frame
 
 
 class Ledger:
@@ -46,12 +47,14 @@ class Ledger:
         if not self._exists():
             return False
         df = self.spark.read.schema(HISTORY).parquet(self.path)
-        return df.where(F.col("name") == F.lit(name)).limit(1).count() > 0
+        return not df.where(F.col("name") == F.lit(name)).isEmpty()
+
+    def _entry(self, name: str) -> DataFrame:
+        """The one-row frame ``record`` appends (JVM-local, no Python RDD)."""
+        return local_frame(self.spark, [(name,)], HISTORY)
 
     def record(self, name: str) -> None:
-        self.spark.createDataFrame([(name,)], HISTORY).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.path)
+        self._entry(name).coalesce(1).write.mode("append").parquet(self.path)
 
     def check_and_record(self, name: str) -> bool:
         """True if already seen (skip ETL); else records and returns False."""

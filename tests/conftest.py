@@ -24,28 +24,38 @@ SF_CORRECT = f"{TESTDATA}/sf0.01"
 # everything (the full tier stays the pre-commit bar for changes that
 # touch what a slow test pins — curation classify/run parity, the
 # scale-soak machinery, the plan census, the semantic-dedup oracle).
+# Keys are node ids (``file.py::name``) so a same-named test in another
+# module is not skipped along with them.
 SLOW_TIER: dict[str, str] = {
     # classify()==run() row-parity across the full config grid — the
     # keepbest seam tests cover the same seam in-tier in ~12 s
-    "test_classify_matches_run": "612s: full classify/run config grid",
-    "test_scale_soak_audit_machinery": "198s: soak harness self-test",
+    "test_curation.py::test_classify_matches_run": "612s: full classify/run config grid",
+    "test_scale_patterns.py::test_scale_soak_audit_machinery": "198s: soak harness self-test",
     # this one entry's DuckDB oracle (recursive CC closure over the
     # semantic-dup graph) dominates the parity sweep; the entry itself
     # stays covered by tools/parity01.sh and the driver's own gate
-    "test_query_matches_oracle[embedding_semantic_dedup_survivors]":
+    "test_oracle_parity.py::test_query_matches_oracle[embedding_semantic_dedup_survivors]":
         "172s: recursive-CTE oracle",
     # the every-entry plan census (builds all 250 physical plans); the
     # per-entry plan tests still run in-tier
-    "test_no_cartesian_or_row_udfs_in_any_declared_entry":
+    "test_plans_physical.py::test_no_cartesian_or_row_udfs_in_any_declared_entry":
         "124s: 250-plan census",
 }
+
+
+def _file_nodeid(nodeid: str) -> str:
+    """``dir/test_x.py::name[param]`` → ``test_x.py::name[param]``: the
+    directory prefix depends on where pytest was started, the rest
+    does not."""
+    path, sep, rest = nodeid.partition("::")
+    return os.path.basename(path) + sep + rest
 
 
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS") == "1":
         return
     for item in items:
-        why = SLOW_TIER.get(item.name)
+        why = SLOW_TIER.get(_file_nodeid(item.nodeid))
         if why:
             item.add_marker(
                 pytest.mark.skip(
@@ -54,9 +64,31 @@ def pytest_collection_modifyitems(config, items):
             )
 
 
+def _driver_memory() -> str | None:
+    """The test JVM's heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: a
+    quarter of physical memory (``MemTotal``), at most the package's 48g
+    default. A fixed 48g heap on a smaller machine lets the JVM grow
+    past what the machine has, and the kernel's OOM killer ends the
+    session mid-suite. ``None`` leaves the choice to ``get_spark``: the
+    variable is set, or there is no ``/proc/meminfo``."""
+    if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return None
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return None
+    return f"{max(1024, min(48 * 1024, kib // 4 // 1024))}m"
+
+
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    mem = _driver_memory()
+    s = get_spark(
+        "tests",
+        cpus=int(os.environ.get("SPARK_GRAFT_CPUS", "8")),
+        extra_conf={"spark.driver.memory": mem} if mem else None,
+    )
     yield s
 
 

@@ -243,3 +243,96 @@ def test_pandas_api_bridge_runs_reference_idioms(spark, netflix_csv):
     exploded["cast"] = exploded["cast"].str.strip()  # task.py:87
     assert len(exploded) == 55955              # SURVEY §2.2 golden
     assert exploded["cast"].nunique() == 32881  # distinct actors
+
+
+# ---------------------------------------------------------------------------
+# Hermetic pipeline tests: a tiny CSV written by the test itself, so the
+# write → declared-schema read path runs without the reference dataset.
+# ---------------------------------------------------------------------------
+
+_TINY_HEADER = [
+    "show_id", "type", "title", "director", "cast", "country", "date_added",
+    "release_year", "rating", "duration", "listed_in", "description",
+]
+_TINY_DESCRIPTION = 'She said "hi".\nThen, a second line.'  # csv.writer escapes " as ""
+_TINY_ROWS = [
+    # quoted commas, "" escapes and an embedded newline in one field; a
+    # leading-space date; a cast name repeated within the show
+    ["s1", "Movie", "Title, With Comma", "Jane Doe", "Tom Hanks, Meg Ryan, Tom Hanks",
+     "United States", " January 1, 2020", "2019", "PG", "90 min", "Dramas, Comedies",
+     _TINY_DESCRIPTION],
+    # director and cast both NULL
+    ["s2", "TV Show", "Quiet Show", "", "", "", "March 5, 2021", "2021", "TV-G",
+     "1 Season", "Docuseries", "Nobody in it."],
+    # a single-token cast name; a director who is cast elsewhere
+    ["s3", "Movie", "Solo", "Tom Hanks", "Cher", "France", "May 9, 2018", "2017", "R",
+     "100 min", "Dramas", "One name."],
+]
+
+
+@pytest.fixture()
+def tiny_csv(tmp_path) -> str:
+    import csv
+
+    path = tmp_path / "tiny_titles.csv"
+    with open(path, "w", newline="") as f:
+        w = csv.writer(f)
+        w.writerow(_TINY_HEADER)
+        w.writerows(_TINY_ROWS)
+    return str(path)
+
+
+def test_pipeline_run_hermetic(spark, tiny_csv, tmp_path):
+    """Ingest → warehouse → read back, on a CSV with every quirk the
+    catalog has. ``table()`` reads with the declared schema, so it must
+    equal what Spark infers from the written files: a column added,
+    renamed or retyped in ``transform`` without ``schemas.STAR_SCHEMA``
+    fails here instead of reading back wrong."""
+    import datetime
+
+    from data_engineer_task_spark.plans.netflix import NetflixPipeline
+
+    pipe = NetflixPipeline(spark, str(tmp_path / "wh"))
+    assert pipe.run(tiny_csv) is not None
+
+    counts = {t: pipe.table(t).count() for t in ("shows", "personnel", "movie_crew", "listings")}
+    # movie_crew keeps the repeated (s1, Tom Hanks, cast) row; listings
+    # keep " Comedies" untrimmed
+    assert counts == {"shows": 3, "personnel": 4, "movie_crew": 6, "listings": 4}
+
+    for t in ("shows", "personnel", "movie_crew", "listings"):
+        inferred = (
+            spark.read.option("recursiveFileLookup", "true")
+            .parquet(f"{pipe.warehouse}/{t}")
+            .schema
+        )
+        assert pipe.table(t).schema == inferred, t
+
+    s1 = pipe.table("shows").where(F.col("show_id") == "s1").first()
+    assert s1["title"] == "Title, With Comma"
+    assert s1["description"] == _TINY_DESCRIPTION
+    assert s1["date_added"] == datetime.datetime(2020, 1, 1)
+    assert pipe.table("shows").where(F.col("show_id") == "s2").first()["date_added"] is not None
+    cher = pipe.table("personnel").where(F.col("name") == "Cher").first()
+    assert (cher["first_name"], cher["last_name"]) == ("Cher", "")
+    assert sorted(r["listing"] for r in pipe.table("listings").collect()) == [
+        " Comedies", "Docuseries", "Dramas", "Dramas",
+    ]
+
+    assert pipe.run(tiny_csv) is None  # ledger skip
+
+
+def test_constant_frames_stay_in_the_jvm(spark, tmp_path):
+    """The gender lookup and the ledger's row are driver-side constants.
+    Built through pandas→Arrow they plan as ``LocalTableScan``; a
+    row-list ``createDataFrame`` plans as ``Scan ExistingRDD`` over a
+    Python RDD and starts Python workers on every ingest."""
+    from data_engineer_task_spark.sources.ledger import Ledger
+
+    frames = {
+        "gender_lookup_df": lambda: gender_lookup_df(spark),
+        "Ledger._entry": lambda: Ledger(spark, str(tmp_path / "h"))._entry("x.csv"),
+    }
+    for name, build in frames.items():
+        plan = build()._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)

@@ -3,6 +3,7 @@ salted joins (skew), plus the as-of join operator's semantics."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineer_task_spark.operators.asof import as_of_join
@@ -1264,6 +1265,23 @@ def test_hll_small_range_and_null_skip(spark):
     est = hll_estimate(sk).collect()[0]
     assert est["n_registers"] <= 7  # ≤: register collisions possible
     assert 5.0 < est["hll_raw"] < 9.0  # linear counting near-exact at n=7
+
+
+@pytest.mark.parametrize("fit", ["kmeans_fit", "pq_fit"])
+def test_fit_error_path_releases_cache(spark, fit):
+    """Too few vectors for k raises — and the fit's persisted copy of
+    the input is released with it, not pinned for the session."""
+    from data_engineer_task_spark.operators import similarity
+
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])], ["vec_id", "embedding"]
+    )
+    with pytest.raises(ValueError, match="need >= 3"):
+        getattr(similarity, fit)(emb, "vec_id", "embedding", k=3)
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_pq_fit_joint_pass_matches_per_subspace_kmeans(spark):
