@@ -25,6 +25,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql import types as T
+from pyspark.sql.types import _infer_type
+
+from ..session import local_frame
 
 
 def as_double(vec: Column) -> Column:
@@ -95,7 +99,8 @@ def cosine_topk(
     base = emb.select(F.col(id_col), as_double(F.col(vec_col)).alias("_v"))
     qrows = base.where(query_filter).orderBy(id_col).collect()
     if not qrows:
-        return emb.sparkSession.createDataFrame(
+        return local_frame(
+            emb.sparkSession,
             [],
             base.select(
                 F.col(id_col).alias("query_id"),
@@ -324,10 +329,8 @@ def _assign_to_centroids(
     C = np.asarray(centroids, dtype=np.float64)
     c_sq = (C * C).sum(axis=1)
 
-    # NOTE: legacy PandasUDFType form on purpose — PySpark 4.1 type-hint
-    # inference rejects the Series -> DataFrame (struct result) shape.
-    @F.pandas_udf("struct<cluster:int,d2:double>", F.PandasUDFType.SCALAR)
-    def assign(vs):
+    @F.pandas_udf("struct<cluster:int,d2:double>")
+    def assign(vs: pd.Series) -> pd.DataFrame:
         if len(vs) == 0:
             return pd.DataFrame({"cluster": pd.array([], dtype="int32"),
                                  "d2": pd.array([], dtype="float64")})
@@ -463,10 +466,8 @@ def ivf_assign(
     # window): batch × centroid matmul, argmax over the ROUNDED cosine
     # with the lowest-centroid-id tie-break (centroids are sorted by
     # id, and numpy argmax takes the first maximum).
-    # Legacy PandasUDFType form: PySpark 4.1 type-hint inference
-    # rejects the Series -> DataFrame (struct result) shape.
-    @F.pandas_udf("struct<ci:int,cos_sim:double>", F.PandasUDFType.SCALAR)
-    def best(vs):
+    @F.pandas_udf("struct<ci:int,cos_sim:double>")
+    def best(vs: pd.Series) -> pd.DataFrame:
         V = np.asarray(vs.tolist(), dtype=np.float64)
         norm = np.sqrt((V * V).sum(axis=1))
         S = _safe_cos(V @ C.T, norm[:, None] * cnorm[None, :], round_to)
@@ -529,9 +530,16 @@ def ivf_topk(
         probe_rows.extend(
             (qid, int(c), [float(x) for x in q]) for c in cells
         )
-    spark = assigned.sparkSession
-    probes = spark.createDataFrame(
-        probe_rows, ["query_id", "cluster", "_q"]
+    probes = local_frame(
+        assigned.sparkSession,
+        probe_rows,
+        T.StructType(
+            [
+                T.StructField("query_id", _infer_type(queries[0][0])),
+                T.StructField("cluster", T.LongType()),
+                T.StructField("_q", T.ArrayType(T.DoubleType())),
+            ]
+        ),
     )
 
     @F.pandas_udf("double")

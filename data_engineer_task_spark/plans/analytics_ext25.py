@@ -10,7 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..session import local_frame
 from .analytics import _SHINGLE_CTE, _near_dup_tail, _t, _t_wide, q
 
 
@@ -421,10 +423,13 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(1, d + 1):
         trace = trace + C[(i, i)]
     top_dim = min(range(1, d + 1), key=lambda k: (-abs(v[k - 1]), k))
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         [(int(n), float(lam), float(lam / trace), int(top_dim),
           float(abs(v[top_dim - 1])))],
-        "n_vectors long, _lam double, _frac double, top_dim int, _load double",
+        T.StructType.fromDDL(
+            "n_vectors long, _lam double, _frac double, top_dim int, _load double"
+        ),
     )
     return out.select(
         "n_vectors",

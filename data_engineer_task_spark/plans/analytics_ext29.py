@@ -16,7 +16,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..session import local_frame
 from .analytics import _t, _t_wide, q
 
 _ROUNDS = 4
@@ -107,9 +109,13 @@ def doc_bpe_phrase_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r, f"{a} {b}", cnt, total)
         for r, (a, b, cnt, total) in enumerate(stats, 1)
     ]
-    out = spark.createDataFrame(
-        rows, "round INT, merged_pair STRING, pair_count BIGINT, "
-        "total_tokens_after BIGINT"
+    out = local_frame(
+        spark,
+        rows,
+        T.StructType.fromDDL(
+            "round INT, merged_pair STRING, pair_count BIGINT, "
+            "total_tokens_after BIGINT"
+        ),
     )
     return out.orderBy("round")
 

@@ -8,6 +8,8 @@ what we'd ship to a real cluster except the master/memory lines:
  - UTC session timezone so results compare bit-for-bit with the DuckDB
    oracle (duckdb timestamps are UTC-naive)
  - Arrow enabled for any pandas interchange (Pandas UDF fast path)
+ - Python workers fork from ``pydaemon`` (no per-task re-read of the
+   pyspark.zip directory), with the package root on their PYTHONPATH
 """
 
 from __future__ import annotations
@@ -18,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the directory holding the ``data_engineer_task_spark`` package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -67,6 +71,16 @@ def get_spark(
     merged = " ".join(x for x in (jvm_opts, caller_opts) if x)
     if merged:
         builder = builder.config("spark.driver.extraJavaOptions", merged)
+    # Python workers start from pydaemon (one zip-directory read per
+    # importer, not one per task), so they must import this package
+    # whatever the caller's cwd or PYTHONPATH: the package root goes
+    # on the worker path ahead of any caller-supplied entries.
+    caller_path = extra_conf.pop("spark.executorEnv.PYTHONPATH", "")
+    builder = builder.config("spark.python.daemon.module", "data_engineer_task_spark.pydaemon")
+    builder = builder.config(
+        "spark.executorEnv.PYTHONPATH",
+        os.pathsep.join(x for x in (_PACKAGE_ROOT, caller_path) if x),
+    )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
@@ -82,4 +96,10 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) ->
     Python RDD, so every task that reads it starts a Python worker."""
     import pandas as pd
 
+    if not rows:
+        # pyspark takes the row route for an empty pandas frame; an
+        # empty Arrow table still plans as ``LocalTableScan <empty>``
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return spark.createDataFrame(to_arrow_schema(schema).empty_table(), schema)
     return spark.createDataFrame(pd.DataFrame(rows, columns=schema.fieldNames()), schema)

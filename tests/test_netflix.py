@@ -323,16 +323,32 @@ def test_pipeline_run_hermetic(spark, tiny_csv, tmp_path):
 
 
 def test_constant_frames_stay_in_the_jvm(spark, tmp_path):
-    """The gender lookup and the ledger's row are driver-side constants.
-    Built through pandas→Arrow they plan as ``LocalTableScan``; a
-    row-list ``createDataFrame`` plans as ``Scan ExistingRDD`` over a
-    Python RDD and starts Python workers on every ingest."""
+    """The gender lookup, the ledger's row and the driver-side frames
+    of the entries below are constants built on the driver. Built
+    through pandas→Arrow they plan as ``LocalTableScan``; a row-list
+    ``createDataFrame`` plans as ``Scan ExistingRDD`` over a Python RDD
+    and starts Python workers on every ingest or query."""
+    from conftest import SF_SMOKE
+    from data_engineer_task_spark.operators.similarity import cosine_topk
+    from data_engineer_task_spark.plans.analytics import QUERIES
+    from data_engineer_task_spark.sources.catalog import load_table
     from data_engineer_task_spark.sources.ledger import Ledger
 
     frames = {
         "gender_lookup_df": lambda: gender_lookup_df(spark),
         "Ledger._entry": lambda: Ledger(spark, str(tmp_path / "h"))._entry("x.csv"),
+        "cosine_topk(no queries)": lambda: cosine_topk(
+            load_table(spark, SF_SMOKE, "embeddings"), "vec_id", "embedding",
+            query_filter=F.col("vec_id") < 0,
+        ),
     }
+    for name in (
+        "embedding_pca_top_component",  # result row
+        "price_histogram_quantiles",  # quantile targets
+        "doc_bpe_phrase_merges",  # per-round stats
+        "embedding_ivf_topk",  # probe rows, an array<double> column
+    ):
+        frames[name] = lambda name=name: QUERIES[name](spark, SF_SMOKE)
     for name, build in frames.items():
         plan = build()._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan and "ExistingRDD" not in plan, (name, plan)
