@@ -205,7 +205,7 @@ def near_duplicates(
 
 def _band_array(n_hashes: int, band_size: int):
     """The banded-signature expression BOTH candidate generators share
-    (and the SQL oracles mirror in analytics.py::_near_dup_tail /
+    (and the SQL oracles mirror in plans/registry.py::_near_dup_tail /
     ext19's _BAND_CASE): band value = md5 of the '|'-joined member
     hashes. One definition — the incremental-vs-batch invariant test
     depends on these staying byte-identical."""

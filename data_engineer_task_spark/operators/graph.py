@@ -2,19 +2,17 @@
 
 A verified near-dup pair list is a graph; the dedup SURVIVOR set is one
 representative per connected component (A~B, B~C ⇒ {A,B,C} even when
-A,C never paired). Min-label propagation: every node starts labeled
-with itself, then repeatedly takes the min of its own and its
-neighbors' labels. Each sweep is one join + one groupBy (shuffles on
-node id); convergence needs O(component diameter) sweeps, and near-dup
-components are shallow by construction (a dup cluster's members all
-link through near-identical text), so the loop exits in a handful of
-rounds — the driver only ever sees a changed-row COUNT per round,
-never the labels.
+A,C never paired). Every node is labeled with the MIN node id of its
+component. Two paths reach that one fixpoint:
 
-This is the simple propagation variant; the large-star/small-star
-alternating algorithm (Kiveris et al., "Connected Components in
-MapReduce and Beyond") cuts round count to O(log n) for deep graphs
-and drops in here unchanged if a corpus ever produces long chains.
+ - driver union-find, after one collect — the edge list is
+   metadata-scale (near-dup pairs ≪ corpus rows), so this is the
+   common path at any corpus size;
+ - the large-star/small-star alternation (Kiveris et al., "Connected
+   Components in MapReduce and Beyond", SoCC'14), distributed, for an
+   edge list above ``driver_threshold``: O(log n) rounds in component
+   size whatever the graph's depth, and the driver only ever sees a
+   per-round (count, xor-hash) checksum, never the labels.
 """
 
 from __future__ import annotations
@@ -30,115 +28,37 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     *,
-    max_iters: int = 15,
     driver_threshold: int = 500_000,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Label every node reachable through ``edges`` with the MIN node id
     of its component (exact fixpoint — deterministic). Returns (node,
     cluster). Nodes = every id appearing on either side; isolated docs
     are the caller's no-op set and are not materialized here.
 
-    Adaptive: the edge list is METADATA-scale (near-dup pairs ≪ corpus
-    rows), so when it fits the driver comfortably (≤ ``driver_threshold``
-    edges, a few tens of MB) the exact union-find runs locally after one
-    collect — a 100 TB corpus with a normal dup rate never needs more
-    than that. The distributed propagation loop is the fallback for
-    pathological graphs, not the common path; both produce the identical
-    min-label fixpoint.
-
-    ``strategy="two_phase"`` skips the adaptive ladder and runs the
-    Kiveris large-star/small-star variant directly — the escalation
-    path the ``auto`` ladder reaches only on deeper-than-``max_iters``
-    graphs, exposed so a declared entry can drive it through the
-    oracle gate on real data (all three strategies produce identical
-    labels)."""
-    if strategy not in ("auto", "two_phase"):
-        raise ValueError(f"unknown strategy {strategy!r}")
+    An edge list of at most ``driver_threshold`` edges (a few tens of
+    MB) is collected and closed by an exact union-find on the driver;
+    a larger one runs the distributed two-phase rounds
+    (``driver_threshold=0`` forces them). Both produce identical
+    labels."""
     # Persist the edge list before sizing it: the pair-generation plan
-    # upstream (LSH verify) is the expensive part, and the size probe,
-    # the union-find collect / propagation loop would each re-run it.
+    # upstream (LSH verify) is the expensive part, and the size probe
+    # and the union-find collect / two-phase rounds would each re-run it.
     und = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist()
-    if strategy == "two_phase":
-        try:
-            return _two_phase_cc(und)
-        finally:
-            und.unpersist()
-    if und.count() <= driver_threshold:
-        try:
+    try:
+        if und.count() <= driver_threshold:
             return _driver_union_find(und)
-        finally:
-            und.unpersist()
-    sym = und.unionByName(
-        und.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).persist()
-    labels = (
-        sym.select(F.col("u").alias("node"))
-        .distinct()
-        .select("node", F.col("node").alias("cluster"))
-        .persist()
-    )
-    labels.count()
-    converged = False
-    for _ in range(max_iters):
-        nb_min = (
-            sym.join(labels, sym["v"] == labels["node"])
-            .groupBy("u")
-            .agg(F.min("cluster").alias("nb_cluster"))
-        )
-        # localCheckpoint each sweep: persist() alone does NOT truncate
-        # the LOGICAL plan — labels is referenced twice per sweep, so
-        # analysis cost doubles every iteration and Catalyst, not the
-        # data, becomes the bottleneck after ~10 sweeps. Eager local
-        # checkpoint materializes AND cuts lineage to the stored
-        # blocks (the standard iterative-algorithm idiom, cf. ALS /
-        # GraphFrames); loss-of-executor recompute is forfeited, which
-        # is fine for a metadata-scale label frame.
-        new_labels = (
-            labels.join(nb_min, labels["node"] == nb_min["u"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("cluster"), F.coalesce("nb_cluster", F.col("cluster"))
-                ).alias("cluster"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.cluster") != F.col("o.cluster"))
-            .count()
-        )
-        labels.unpersist()
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    sym.unpersist()
-    if not converged:
-        # returning unconverged labels would silently split one real
-        # component into several clusters — downstream dedup would keep
-        # extra "survivors". A component deeper than max_iters means
-        # min-label propagation (O(diameter) rounds) is the wrong
-        # algorithm for this graph; escalate to the O(log n)-round
-        # two-phase variant instead of failing.
-        labels.unpersist()
-        try:
-            return _two_phase_cc(und)
-        finally:
-            und.unpersist()
-    und.unpersist()
-    return labels
+        return _two_phase_cc(und)
+    finally:
+        und.unpersist()
 
 
 def _two_phase_cc(und: DataFrame, *, max_rounds: int = 30) -> DataFrame:
     """Alternating large-star / small-star connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — the deep-graph fallback: round count is O(log n) in
+    SoCC'14) — the distributed path: round count is O(log n) in
     component size instead of O(diameter), so a pathological chain
     graph converges in ~log₂(n) alternations where min-label
-    propagation needs n sweeps.
+    propagation would need n sweeps.
 
     Each round is two groupBy-join passes over the (metadata-scale)
     edge list, kept canonical as (hi > lo) pairs:
@@ -151,8 +71,8 @@ def _two_phase_cc(und: DataFrame, *, max_rounds: int = 30) -> DataFrame:
     Convergence is detected by a (count, xor-of-hash) checksum of
     the canonical edge set — cheaper than a two-sided exceptAll and
     collision-safe far beyond any real edge-list size. Returns
-    (node, cluster) labels identical to the other variants'
-    min-label fixpoint."""
+    (node, cluster) labels identical to the union-find's min-label
+    fixpoint."""
     # Eager localCheckpoint, NOT persist: each round references E 16×
     # (sym 2×, ls 4× via sym⋈groupBy(sym), ss 4× via ls⋈groupBy(ls)),
     # and persist() leaves the logical plan intact — analysis cost
@@ -237,8 +157,8 @@ def _two_phase_cc(und: DataFrame, *, max_rounds: int = 30) -> DataFrame:
     ).select(F.col("a").alias("node"), "cluster")
     # The u != v canonicalization dropped SELF-LOOP-ONLY nodes from the
     # star forest, but the contract ("nodes = every id appearing on
-    # either side") labels them (node, node) in the union-find and
-    # propagation paths — union the stragglers back in (ADVICE r3).
+    # either side") labels them (node, node) in the union-find path —
+    # union the stragglers back in (ADVICE r3).
     all_nodes = (
         und.select(F.col("u").alias("node"))
         .unionByName(und.select(F.col("v").alias("node")))
@@ -258,7 +178,7 @@ def _two_phase_cc(und: DataFrame, *, max_rounds: int = 30) -> DataFrame:
 
 def _driver_union_find(und: DataFrame) -> DataFrame:
     """Exact union-find over a collected edge list; roots are kept as
-    the component minimum so labels match the distributed fixpoint
+    the component minimum so labels match the two-phase fixpoint
     bit-for-bit. Output schema mirrors the input id type."""
     parent: dict = {}
 

@@ -106,7 +106,6 @@ def ordered_prefix(
     rank_col: str | None = "rank",
     sums: dict[str, str] | None = None,
     buckets: int = 64,
-    materialize: bool = False,
     validate: bool = False,
     partition_by: Sequence[str] = (),
 ) -> DataFrame:
@@ -119,7 +118,6 @@ def ordered_prefix(
         df,
         [RankSpec(key, tiebreak, rank_col, sums or {}, partition_by)],
         buckets=buckets,
-        materialize=materialize,
         validate=validate,
     )
 
@@ -129,7 +127,6 @@ def ordered_prefix_multi(
     specs: Sequence[RankSpec],
     *,
     buckets: int = 64,
-    materialize: bool = False,
     validate: bool = False,
 ) -> DataFrame:
     """Materialize SEVERAL independent global orders over one frame in
@@ -148,8 +145,8 @@ def ordered_prefix_multi(
     ``.limit()``, ``monotonically_increasing_id``, or mutating source
     underneath. A nondeterministic input can make a bucket's broadcast
     offsets disagree with the rows ranked beside them (duplicate or
-    gapped ranks). ``materialize=True`` snapshots the input first when
-    you can't guarantee that; ``validate=True`` (debug/test mode) runs
+    gapped ranks). Snapshot such an input first (``localCheckpoint``)
+    when you can't guarantee that; ``validate=True`` (debug/test mode) runs
     an extra action per spec asserting the contract held — ranks must
     be a permutation of 1..n — and raises instead of corrupting.
 
@@ -197,14 +194,12 @@ def ordered_prefix_multi(
                     "integer units first; see the determinism contract)"
                 )
 
-    # Deliberately NOT checkpointed by default: measured at sf0.1,
-    # eager localCheckpoint cost MORE than the recomputation it saved
+    # Deliberately NOT checkpointed here: measured at sf0.1, eager
+    # localCheckpoint cost MORE than the recomputation it saved
     # (materialization blocks + an ExistingRDD scan that forfeits
     # column pruning / codegen downstream) — see BASELINE.md's r5
     # builder note. On a real cluster, persist() the input before
     # calling when its lineage is expensive.
-    if materialize:
-        df = df.localCheckpoint(eager=True)
 
     # The double cast serves ONLY the percentile cuts and the bucket
     # comparisons (approx_percentile wants a numeric, and the cast is
@@ -487,7 +482,8 @@ def ordered_prefix_multi(
                         f"for {s.rank_col!r}: {n} rows but max rank {mx}, "
                         f"{dst} distinct ranks — the input plan produced "
                         "different rows across executions (see INPUT "
-                        "CONTRACT; pass materialize=True to snapshot)"
+                        "CONTRACT; snapshot the input with localCheckpoint() "
+                        "before the call)"
                     )
         for s in specs:
             if s.rank_col is None or not s.partition_by:
@@ -513,8 +509,8 @@ def ordered_prefix_multi(
                     f"for {s.rank_col!r} in groups "
                     f"{[tuple(r[c] for c in s.partition_by) for r in bad]} "
                     "— ranks are not a permutation of 1..n within the "
-                    "group (see INPUT CONTRACT; pass materialize=True "
-                    "to snapshot)"
+                    "group (see INPUT CONTRACT; snapshot the input with "
+                    "localCheckpoint() before the call)"
                 )
     return out_df
 

@@ -24,11 +24,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _SPLIT_BYTE, _kmeans_oracle_ctes, _md5_byte_sql, _t, q
-
-# Third-batch entries register themselves the same way on import (kept
-# in a sibling module so this file stays navigable). The import lives
-# at the bottom of the module.
+from .registry import (
+    _CMS_BUCKET,
+    _SPLIT_BYTE,
+    _hex_int_sql,
+    _kmeans_oracle_ctes,
+    _t,
+    _t_wide,
+    q,
+)
 
 
 @q(
@@ -841,17 +845,13 @@ def order_due_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @q(
     "doc_token_cms_topk",
-    """
+    f"""
     WITH toks AS (
       SELECT unnest(string_split(text, ' ')) AS token FROM documents
     ),
     vocab AS (SELECT token, count(*) AS cnt FROM toks GROUP BY token),
     cells AS (
-      SELECT j, (instr('0123456789abcdef',
-                       substr(md5('cms:' || CAST(j AS VARCHAR) || ':' || token), 1, 1)) - 1) * 16
-               + (instr('0123456789abcdef',
-                        substr(md5('cms:' || CAST(j AS VARCHAR) || ':' || token), 2, 1)) - 1)
-               AS bucket,
+      SELECT j, {_CMS_BUCKET.format(j="j", tok="token")} AS bucket,
              cnt
       FROM vocab CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j)
     ),
@@ -869,10 +869,7 @@ def order_due_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
       CROSS JOIN (SELECT unnest([0, 1, 2, 3]) AS j) d
       JOIN sketch s
         ON s.j = d.j
-       AND s.bucket = (instr('0123456789abcdef',
-                             substr(md5('cms:' || CAST(d.j AS VARCHAR) || ':' || t.token), 1, 1)) - 1) * 16
-                     + (instr('0123456789abcdef',
-                              substr(md5('cms:' || CAST(d.j AS VARCHAR) || ':' || t.token), 2, 1)) - 1)
+       AND s.bucket = {_CMS_BUCKET.format(j="d.j", tok="t.token")}
       GROUP BY t.token, t.true_cnt
     )
     SELECT token, true_cnt, CAST(cms_est AS BIGINT) AS cms_est
@@ -886,7 +883,6 @@ def doc_token_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact vocabulary at 100 TB — the oracle rebuilds the identical grid
     in SQL, and the one-sided CMS guarantee (est >= truth) is pinned by
     a property test. See operators/sketch.py for shuffle shape."""
-    from .analytics import _t_wide
     from ..operators.sketch import cms_build, cms_estimate
 
     docs = _t_wide(spark, sf_dir, "documents")
@@ -957,16 +953,6 @@ def purchase_click_cogroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _md5_uint16_sql(expr: str, salt: str = "ws:") -> str:
-    """DuckDB spelling of sampling._md5_uint16(col, salt) — salted so
-    weighted-sample membership is independent of the split/stratified
-    hashes (see operators/sampling.py::_md5_byte0)."""
-    hv = lambda p: (  # noqa: E731
-        f"(instr('0123456789abcdef', substr(md5('{salt}' || {expr}), {p}, 1)) - 1)"
-    )
-    return f"((({hv(1)} * 16 + {hv(2)}) * 16 + {hv(3)}) * 16 + {hv(4)})"
-
-
 @q(
     "doc_weighted_sample",
     f"""
@@ -974,7 +960,7 @@ def _md5_uint16_sql(expr: str, salt: str = "ws:") -> str:
     tot AS (SELECT CAST(sum(wt) AS DOUBLE) AS W, CAST(count(*) AS DOUBLE) AS N
             FROM w),
     s AS (SELECT doc_id, wt FROM w, tot
-          WHERE CAST({_md5_uint16_sql("CAST(doc_id AS VARCHAR)")} AS DOUBLE) * W
+          WHERE CAST({_hex_int_sql("md5('ws:' || CAST(doc_id AS VARCHAR))", 4)} AS DOUBLE) * W
                 < 0.2 * N * wt * 65536.0)
     SELECT CAST(count(*) AS BIGINT)    AS n_sampled,
            CAST(sum(doc_id) AS BIGINT) AS id_checksum,
@@ -1062,7 +1048,7 @@ def embedding_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN search path over the trained IVF index: route each query to
     its nprobe=2 nearest k-means cells, scan only those inverted lists,
     rank by rounded cosine with id tie-breaks. The oracle reuses the
-    unrolled-Lloyd's CTE chain (``analytics._kmeans_oracle_ctes``, 3
+    unrolled-Lloyd's CTE chain (``registry._kmeans_oracle_ctes``, 3
     iterations to match) — with centroids pinned by those CTEs the
     nprobe routing and per-cell scan are plain SQL top-k. Exact-recall
     vs brute force on separated blobs stays pinned in
@@ -1311,7 +1297,7 @@ def user_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id, source,
              row_number() OVER (
                PARTITION BY source
-               ORDER BY {_md5_byte_sql("CAST(doc_id AS VARCHAR)", "cap:")},
+               ORDER BY {_hex_int_sql("md5('cap:' || CAST(doc_id AS VARCHAR))", 2)},
                         doc_id
              ) AS rn
       FROM documents
@@ -1373,7 +1359,6 @@ def doc_bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (arrays_zip + slice) so adjacent pairs never need a positional
     self-join — the only shuffle is the final count over (w1, w2). The
     oracle spells the same pairs relationally (pos+1 self-join)."""
-    from .analytics import _t_wide
 
     docs = _t_wide(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
@@ -1467,7 +1452,6 @@ def doc_bigram_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines (libm ln differs in the last ulp); the unigram marginal
     table broadcasts onto the bigram table, so beyond the token counts
     nothing re-shuffles. b>=5 is the standard low-count PMI guard."""
-    from .analytics import _t_wide
 
     docs = _t_wide(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
@@ -1674,7 +1658,3 @@ def order_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("bucket")
     )
-
-
-# Third-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext2  # noqa: E402,F401  isort:skip

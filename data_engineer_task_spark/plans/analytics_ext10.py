@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _t, q
+from .registry import _t, q
 from ..sources.catalog import gated_broadcast
 
 
@@ -399,7 +399,3 @@ def customer_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("master_key")
     )
-
-
-# Twelfth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext11  # noqa: E402,F401  isort:skip

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.sampling import _md5_byte0
-from .analytics import _md5_byte_sql, _t, _t_wide, q
+from .registry import _hex_int_sql, _t, _t_wide, q
 
 
 @q(
@@ -141,7 +141,7 @@ def customer_revenue_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     hashed AS (
       SELECT doc_id, token,
-             {_md5_byte_sql("token", "fh:")} AS bucket
+             {_hex_int_sql("md5('fh:' || token)", 2)} AS bucket
       FROM toks
     ),
     tot AS (SELECT CAST(count(*) AS DOUBLE) AS t FROM hashed)
@@ -339,7 +339,3 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round(F.col("s") / 100.0 * 100.0) / 100.0).alias("total_revenue"),
         (F.round(gini * 1000000.0) / 1000000.0).alias("gini"),
     )
-
-
-# Thirteenth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext12  # noqa: E402,F401  isort:skip

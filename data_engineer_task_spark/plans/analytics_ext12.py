@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _t, q
+from .registry import _t, q
 
 # dot product as a sequential left fold — the same iteration order as
 # DuckDB's list_dot_product, so the sum is bit-identical across engines
@@ -402,7 +402,3 @@ def customer_linkage_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("score")
     )
-
-
-# Fourteenth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext13  # noqa: E402,F401  isort:skip

@@ -21,9 +21,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.sampling import _md5_uint16
-from .analytics import _t, q
+from .registry import _hex_int_sql, _t, q
 from ..sources.catalog import gated_broadcast
-from .analytics_ext7 import _md5_u16_sql
 
 _CELL = 10.0  # degrees; coarse enough that dense cells exist at test SFs
 _MIN_PTS = 4
@@ -46,9 +45,9 @@ def _dbscan_iter_sql(prev: str, name: str) -> str:
     f"""
     WITH pts AS (
       SELECT c_custkey,
-             CAST(floor(({_md5_u16_sql("CAST(c_custkey AS VARCHAR)", "clat:")}
+             CAST(floor(({_hex_int_sql("md5('clat:' || CAST(c_custkey AS VARCHAR))", 4)}
                           / 65536.0 * 180.0 - 90.0) / {_CELL}) AS BIGINT) AS cy,
-             CAST(floor(({_md5_u16_sql("CAST(c_custkey AS VARCHAR)", "clon:")}
+             CAST(floor(({_hex_int_sql("md5('clon:' || CAST(c_custkey AS VARCHAR))", 4)}
                           / 65536.0 * 360.0 - 180.0) / {_CELL}) AS BIGINT) AS cx
       FROM customer
     ),
@@ -440,7 +439,3 @@ def nation_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("nation")
     )
-
-
-# Fifteenth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext14  # noqa: E402,F401  isort:skip

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _t, _t_wide, q
+from .registry import _t, _t_wide, q
 
 
 @q(
@@ -403,7 +403,3 @@ def customer_segment_mode_imputation(spark: SparkSession, sf_dir: str) -> DataFr
         )
         .orderBy("nationkey")
     )
-
-
-# Sixteenth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext15  # noqa: E402,F401  isort:skip

@@ -20,12 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.sampling import _md5_byte0
-from .analytics import _md5_byte_sql, _t, _t_wide, q
-
-_AB_VARIANT_SQL = (
-    f"CASE WHEN ({_md5_byte_sql('CAST(user_id AS VARCHAR)', 'ab:')}) % 2 = 0 "
-    "THEN 'A' ELSE 'B' END"
-)
+from .registry import _AB_VARIANT_SQL, _t, _t_wide, q
 
 
 @q(
@@ -497,7 +492,3 @@ def event_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type", "window_day")
     )
-
-
-# Seventeenth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext16  # noqa: E402,F401  isort:skip

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _t, q
+from .registry import _t, q
 
 _MODERN_SQL = """
 SELECT o_orderpriority,
@@ -296,7 +296,3 @@ def user_journey_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("dist")
     )
-
-
-# Eighteenth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext17  # noqa: E402,F401  isort:skip

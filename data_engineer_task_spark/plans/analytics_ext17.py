@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _t, q
+from .registry import _t, q
 
 
 @q(
@@ -282,7 +282,3 @@ def event_daily_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n").cast("long").alias("n_pairs"),
         (F.round(acf * 1000000.0) / 1000000.0).alias("acf"),
     ).orderBy("event_type", "lag")
-
-
-# Nineteenth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext18  # noqa: E402,F401  isort:skip

@@ -19,8 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.sampling import _md5_byte0
-from .analytics import _t, q
-from .analytics_ext15 import _AB_VARIANT_SQL
+from .registry import _AB_VARIANT_SQL, _t, q
 
 
 @q(
@@ -233,7 +232,3 @@ def brand_top_parts_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("p_brand", "price_rank", "p_partkey")
     )
-
-
-# Twentieth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext19  # noqa: E402,F401  isort:skip

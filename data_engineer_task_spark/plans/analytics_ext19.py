@@ -28,8 +28,15 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.sampling import _md5_byte0
-from .analytics import _MINHASH_MINS, _SHINGLE_CTE, _md5_byte_sql, _t, _t_wide, q
-from .analytics_ext15 import _AB_VARIANT_SQL
+from .registry import (
+    _AB_VARIANT_SQL,
+    _MINHASH_MINS,
+    _SHINGLE_CTE,
+    _hex_int_sql,
+    _t,
+    _t_wide,
+    q,
+)
 
 _BAND_CASE = " ".join(
     f"WHEN {b} THEN md5(mh_{2 * b} || '|' || mh_{2 * b + 1})" for b in range(4)
@@ -183,7 +190,7 @@ def corpus_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH a AS (
       SELECT doc_id, n_chars,
-             ({_md5_byte_sql("CAST(doc_id AS VARCHAR)", "shard:")}) % 8 AS shard
+             {_hex_int_sql("md5('shard:' || CAST(doc_id AS VARCHAR))", 2)} % 8 AS shard
       FROM documents
     )
     SELECT shard,
@@ -470,7 +477,3 @@ def ab_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round(chi2 * 1000000.0) / 1000000.0).alias("chi2"),
         F.when(chi2 > 3.841, 1).otherwise(0).cast("long").alias("srm_flag"),
     )
-
-
-# Twenty-first-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext20  # noqa: E402,F401  isort:skip

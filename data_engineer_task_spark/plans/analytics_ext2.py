@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _t, _t_wide, q
+from .registry import _t, _t_wide, q
 
 
 def _tokens(col: str = "text"):
@@ -1158,7 +1158,3 @@ def customer_page_two(spark: SparkSession, sf_dir: str) -> DataFrame:
         .offset(10)
         .limit(10)
     )
-
-
-# Fourth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext3  # noqa: E402,F401  isort:skip

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _SHINGLE_CTE, _SPLIT_BYTE, _near_dup_tail, _t, _t_wide, q
+from .registry import _SHINGLE_CTE, _SPLIT_BYTE, _near_dup_tail, _t, _t_wide, q
 from ..sources.catalog import gated_broadcast
 
 
@@ -732,5 +732,3 @@ def corpus_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-from . import analytics_ext21  # noqa: E402,F401  isort:skip

@@ -22,39 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _SHINGLE_CTE, _near_dup_tail, _t, _t_wide, q
-
-_SEG = 10  # tokens per non-overlapping segment
-
-# Shared CTE: one row per (doc, segment) with the segment's text,
-# md5 hash, and token length. Mirrors the Spark-side sequence→explode→
-# slice chunker (same arithmetic as doc_overlap_chunks with
-# width == stride, so the tail segment is short, never overlapping).
-_SEGMENT_CTE = f"""
-    t AS (SELECT doc_id, source, string_split(text, ' ') AS toks
-          FROM documents),
-    n AS (SELECT doc_id, source, toks,
-                 (greatest(len(toks) - {_SEG}, 0) + {_SEG} - 1)
-                   // {_SEG} + 1 AS nseg
-          FROM t),
-    segx AS (
-      SELECT doc_id, source, toks,
-             unnest(generate_series(0, nseg - 1)) AS seg_id
-      FROM n
-    ),
-    seg AS (
-      SELECT doc_id, source, CAST(seg_id AS BIGINT) AS seg_id,
-             array_to_string(
-               toks[seg_id * {_SEG} + 1 : seg_id * {_SEG} + {_SEG}], ' ')
-               AS seg_text,
-             CAST(len(toks[seg_id * {_SEG} + 1 : seg_id * {_SEG} + {_SEG}])
-                  AS BIGINT) AS seg_len
-      FROM segx
-    ),
-    segh AS (SELECT doc_id, source, seg_id, seg_text, seg_len,
-                    md5(seg_text) AS seg_hash
-             FROM seg)
-"""
+from .registry import _SEG, _SEGMENT_CTE, _SHINGLE_CTE, _near_dup_tail, _t_wide, q
 
 
 def _segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -327,5 +295,3 @@ def doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("cnts").cast("long").alias("n_distinct"),
         (F.round(ent * 10000.0) / 10000.0).alias("entropy_bits"),
     ).orderBy("doc_id")
-
-from . import analytics_ext22  # noqa: E402,F401  isort:skip

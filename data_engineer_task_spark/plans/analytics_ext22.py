@@ -22,7 +22,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .analytics import _t, _t_wide, q
+from .registry import _SHINGLE_CTE, _hex_int_sql, _near_dup_tail, _t, _t_wide, q
 
 # ---------------------------------------------------------------------------
 # Poisson bootstrap
@@ -59,13 +59,6 @@ _REPS_PER_HASH = 8
 _N_HASH_GROUPS = _B_REPS // _REPS_PER_HASH
 
 
-def _u16_window_sql(h: str, j: int) -> str:
-    hv = lambda p: (  # noqa: E731
-        f"(instr('0123456789abcdef', substr({h}, {4 * j + p}, 1)) - 1)"
-    )
-    return f"((({hv(1)} * 16 + {hv(2)}) * 16 + {hv(3)}) * 16 + {hv(4)})"
-
-
 def _u16_window_col(h, j: int):
     _HEX = "0123456789abcdef"
     hv = lambda p: F.instr(F.lit(_HEX), F.substring(h, 4 * j + p, 1)) - 1  # noqa: E731
@@ -86,7 +79,7 @@ def _u16_window_col(h, j: int):
     ),
     reps AS (
       SELECT cents, g * {_REPS_PER_HASH} + jj.j AS b,
-             CASE jj.j {" ".join(f"WHEN {j} THEN {_u16_window_sql('h', j)}"
+             CASE jj.j {" ".join(f"WHEN {j} THEN {_hex_int_sql('h', 4, 4 * j + 1)}"
                                  for j in range(_REPS_PER_HASH))} END AS u
       FROM hashed,
            (SELECT unnest(generate_series(0, {_REPS_PER_HASH - 1})) AS j) jj
@@ -423,12 +416,11 @@ def orders_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH recall evaluation and per-group OLS trend
 # ---------------------------------------------------------------------------
 
-from .analytics import _SHINGLE_CTE, _md5_byte_sql, _near_dup_tail  # noqa: E402
 
 # Deterministic ~25% doc sample for the recall evaluation (engine-
 # portable salted md5 byte — own salt so membership is independent of
 # the split/stratum/sample operators, per the sampling-salt rule).
-_LSHR_BYTE = _md5_byte_sql("CAST(doc_id AS VARCHAR)", "lshr:")
+_LSHR_BYTE = _hex_int_sql("md5('lshr:' || CAST(doc_id AS VARCHAR))", 2)
 
 
 @q(
@@ -627,5 +619,3 @@ def nation_revenue_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         slope.alias("slope_cents_per_day"),
         intercept.alias("intercept_cents"),
     ).orderBy("nation")
-
-from . import analytics_ext23  # noqa: E402,F401  isort:skip

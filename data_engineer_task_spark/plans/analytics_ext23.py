@@ -16,7 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .analytics import _LANG_KEYWORDS, _KW_SQL, _t, _t_wide, q
+from .registry import (
+    _KW_SQL,
+    _LANG_KEYWORDS,
+    _SHINGLE_CTE,
+    _STOP_SQL,
+    _near_dup_tail,
+    _t_wide,
+    q,
+)
 
 
 @q(
@@ -188,8 +196,6 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Quality × duplication interaction
 # ---------------------------------------------------------------------------
-
-from .analytics import _SHINGLE_CTE, _STOP_SQL, _near_dup_tail  # noqa: E402
 
 
 @q(
@@ -469,6 +475,3 @@ def doc_padding_waste_by_bucketing(spark: SparkSession, sf_dir: str) -> DataFram
             / 10000.0
         ).alias("waste_frac"),
     ).orderBy("policy")
-
-
-from . import analytics_ext24  # noqa: E402,F401  isort:skip

@@ -28,16 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _kmeans_oracle_ctes, _t, _t_wide, q
-from .analytics_ext import _md5_uint16_sql
-
-_EMB_BASE = """
-    base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS v,
-             sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-      FROM embeddings
-    )
-"""
+from .registry import _EMB_BASE, _hex_int_sql, _kmeans_oracle_ctes, _t, _t_wide, q
 
 # Within-cluster duplicate pairs under the final (5-iteration) centroids;
 # threshold on the ROUNDED cosine, mirroring similarity._safe_cos.
@@ -151,7 +142,7 @@ def embedding_semantic_dedup_survivors(
     per-cluster removal stats with a removed-id checksum. Components
     come from operators/graph.py::connected_components (driver
     union-find at this metadata scale — dup pairs ≪ corpus — with the
-    distributed two-phase escalation behind it); the oracle closes the
+    distributed two-phase path above its threshold); the oracle closes the
     same graph with a recursive CTE. cos-to-centroid is a map-only
     Arrow kernel against the k×d centroid closure — no join."""
     from ..operators.graph import connected_components
@@ -257,7 +248,7 @@ def embedding_semantic_dedup_survivors(
                   CAST(count(*) AS DOUBLE) AS tw_n FROM w),
     kept AS (
       SELECT w.doc_id FROM w CROSS JOIN tw
-      WHERE CAST({_md5_uint16_sql("CAST(doc_id AS VARCHAR)")} AS DOUBLE) * tw_w
+      WHERE CAST({_hex_int_sql("md5('ws:' || CAST(doc_id AS VARCHAR))", 4)} AS DOUBLE) * tw_w
             < 0.25 * tw_n * CAST(wgt AS DOUBLE) * 65536.0
     )
     SELECT w.lang,
@@ -385,8 +376,3 @@ def doc_dsir_importance_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
-
-
-# Twenty-sixth-batch entries register themselves into QUERIES/ORACLE on
-# import.
-from . import analytics_ext25  # noqa: E402,F401  isort:skip

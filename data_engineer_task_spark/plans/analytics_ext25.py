@@ -1,5 +1,5 @@
 """Twenty-sixth-batch declared queries: driver-gate coverage for the
-distributed connected-components escalation path, and ranking-metric
+distributed connected-components path, and ranking-metric
 evaluation for curation quality scores.
 
 Same contract as plans/analytics.py (see its authoring rules): every
@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import local_frame
-from .analytics import _SHINGLE_CTE, _near_dup_tail, _t, _t_wide, q
+from .registry import _SHINGLE_CTE, _near_dup_tail, _t, _t_wide, q
 
 
 @q(
@@ -40,10 +40,10 @@ from .analytics import _SHINGLE_CTE, _near_dup_tail, _t, _t_wide, q
 )
 def near_dup_clusters_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`near_dup_clusters` driven through the Kiveris large-star/
-    small-star two-phase variant (``strategy="two_phase"``) instead of
-    the adaptive ladder — VERDICT r3 next-8: the O(log n)-round
-    escalation path the ladder reaches only on deeper-than-max_iters
-    graphs was pytest-pinned but never oracle-gated on real data.
+    small-star two-phase path (``driver_threshold=0``) instead of the
+    driver union-find — VERDICT r3 next-8: the distributed path that
+    ``connected_components`` takes only above its driver threshold
+    was pytest-pinned but never oracle-gated on real data.
     Identical oracle (recursive-CTE closure) and identical output to
     `near_dup_clusters`: the algorithms share one min-label fixpoint,
     so a hash match here proves the star-forest contraction — round
@@ -61,7 +61,7 @@ def near_dup_clusters_twophase(spark: SparkSession, sf_dir: str) -> DataFrame:
         threshold=0.5,
     )
     labels = connected_components(
-        pairs.select("id_a", "id_b"), strategy="two_phase"
+        pairs.select("id_a", "id_b"), driver_threshold=0
     )
     return (
         labels.groupBy("cluster")
@@ -440,8 +440,3 @@ def embedding_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
         "top_dim",
         (F.round(F.col("_load") * 1000000.0) / 1000000.0).alias("top_loading"),
     )
-
-
-# Twenty-seventh-batch entries register themselves into QUERIES/ORACLE
-# on import.
-from . import analytics_ext26  # noqa: E402,F401  isort:skip

@@ -19,27 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketch import kmv_estimate, kmv_hash, kmv_sketch
-from .analytics import _t, q
-
-_K = 64
-# (k-1) · 2^48 — 6 significant bits, exactly representable as DOUBLE;
-# one literal shared by both engines so the estimate is ONE division.
-_KMV_SCALE = f"{(_K - 1) << 48}.0"
-
-
-def _md5_uint48_sql(expr: str, salt: str = "kmv:") -> str:
-    """DuckDB spelling of sketch.kmv_hash(col, salt): first 12 md5
-    nibbles as a BIGINT in [0, 2^48). Salted so sketch membership is
-    independent of the split/strat/ws hashes (operators/sampling.py)."""
-    h = f"md5('{salt}' || {expr})"
-    hv = lambda p: (  # noqa: E731
-        f"(instr('0123456789abcdef', substr({h}, {p}, 1)) - 1)"
-    )
-    acc = hv(1)
-    for p in range(2, 13):
-        acc = f"({acc} * 16 + {hv(p)})"
-    return f"CAST({acc} AS BIGINT)"
-
+from .registry import _K, _KMV_SCALE, _hex_int_sql, _t, q
 
 _UD_V_SQL = "CAST(user_id AS VARCHAR) || '|' || strftime(ts, '%Y-%m-%d')"
 
@@ -51,7 +31,7 @@ _UD_V_SQL = "CAST(user_id AS VARCHAR) || '|' || strftime(ts, '%Y-%m-%d')"
       SELECT DISTINCT event_type, {_UD_V_SQL} AS v FROM events
     ),
     hs AS (
-      SELECT DISTINCT event_type, {_md5_uint48_sql("v")} AS h FROM ud
+      SELECT DISTINCT event_type, CAST({_hex_int_sql("md5('kmv:' || v)", 12)} AS BIGINT) AS h FROM ud
     ),
     rk AS (
       SELECT event_type, h,
@@ -141,7 +121,7 @@ def event_kmv_user_days(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM events WHERE event_type IN ('click', 'purchase')
     ),
     hs AS (
-      SELECT DISTINCT event_type, {_md5_uint48_sql("v")} AS h FROM ud
+      SELECT DISTINCT event_type, CAST({_hex_int_sql("md5('kmv:' || v)", 12)} AS BIGINT) AS h FROM ud
     ),
     rk AS (
       SELECT event_type, h,
@@ -291,8 +271,3 @@ def audience_kmv_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             / 10000.0
         ).alias("inter_kmv_est"),
     )
-
-
-# Twenty-eighth-batch entries register themselves into QUERIES/ORACLE
-# on import.
-from . import analytics_ext27  # noqa: E402,F401  isort:skip

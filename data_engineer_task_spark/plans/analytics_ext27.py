@@ -21,124 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .analytics import _t, q
+from .registry import _M, _PQ_K, _RT, _adc_col, _adc_table, _pq_subspace_ctes, _t, q
 
-_M = 4  # subspaces
-_DSUB = 16  # dims per subspace (64 / 4)
-_PQ_K = 4  # codes per subspace
 _PQ_ITERS = 2
-_RT = 6  # d2 / centroid quantization decimals (the kmeans contract)
 _TOPK = 10
-
-
-def _adc_table(
-    qvec: list[float], codebooks: list[list[list[float]]], round_to: int = _RT
-) -> list[list[float]]:
-    """m×k ADC table: subspace-j squared distance from the query to
-    each code centroid, folded left-to-right over the dsub dims (the
-    oracle's sum() re-associates, so quantize at the shared 1e-6 grid
-    — the same contract the codebooks themselves ride)."""
-    from ..operators.similarity import _round_half_away_scalar
-
-    dsub = len(codebooks[0][0])
-    table: list[list[float]] = []
-    for j, cb in enumerate(codebooks):
-        row = []
-        for cvec in cb:
-            acc = 0.0
-            for d in range(dsub):
-                diff = qvec[j * dsub + d] - cvec[d]
-                acc += diff * diff
-            row.append(_round_half_away_scalar(acc, round_to))
-        table.append(row)
-    return table
-
-
-def _adc_col(table: list[list[float]]):
-    """Left-to-right sum of the per-subspace table lookups over a
-    ``codes`` array column — spelled identically to the oracle's
-    ``q0.t + q1.t + …`` so the unrounded doubles match bitwise."""
-    t_lits = [F.array(*[F.lit(v) for v in row]) for row in table]
-    col = F.element_at(t_lits[0], F.col("codes")[0] + 1)
-    for j in range(1, len(table)):
-        col = col + F.element_at(t_lits[j], F.col("codes")[j] + 1)
-    return col
-
-
-def _pq_subspace_ctes(j: int, *, k: int, n_iters: int, round_to: int) -> str:
-    """Unrolled Lloyd chain for subspace ``j`` over the sliced list
-    ``embedding[lo:hi]`` — a parametrized twin of
-    ``analytics._kmeans_oracle_ctes`` (same quantized-d2 argmin,
-    lowest-cluster tie-break, per-iteration rounded means, empty
-    clusters keeping the previous centroid, and the rounded-fixpoint
-    early-stop argument). Emits ``vx{j}`` … ``afin{j}`` and the final
-    centroid CTE ``c{j}_{n_iters}``; the shared ``seedq`` CTE (lowest-k
-    vec_ids) must already be in scope."""
-    s = 10**round_to
-    lo, hi = j * _DSUB + 1, (j + 1) * _DSUB
-    parts = [
-        f"""vx{j} AS (
-      SELECT vec_id, generate_subscripts(embedding[{lo}:{hi}], 1) AS d,
-             CAST(unnest(embedding[{lo}:{hi}]) AS DOUBLE) AS x
-      FROM embeddings
-    ),
-    c{j}_0 AS (
-      SELECT sq.cluster, v.d, round(v.x * {s}.0) / {s}.0 AS c
-      FROM seedq sq JOIN vx{j} v USING (vec_id)
-    )"""
-    ]
-    for i in range(1, n_iters + 1):
-        parts.append(
-            f"""d{j}_{i} AS (
-      SELECT v.vec_id, c.cluster,
-             round(sum((v.x - c.c) * (v.x - c.c)) * {s}.0) / {s}.0 AS d2
-      FROM vx{j} v JOIN c{j}_{i - 1} c USING (d)
-      GROUP BY v.vec_id, c.cluster
-    ),
-    a{j}_{i} AS (
-      SELECT vec_id, cluster FROM (
-        SELECT vec_id, cluster,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY d2 ASC, cluster ASC) AS rn
-        FROM d{j}_{i}
-      ) WHERE rn = 1
-    ),
-    c{j}_{i} AS (
-      SELECT p.cluster, p.d,
-             coalesce(round(m.c * {s}.0) / {s}.0, p.c) AS c
-      FROM c{j}_{i - 1} p
-      LEFT JOIN (
-        SELECT a.cluster, v.d, avg(v.x) AS c
-        FROM a{j}_{i} a JOIN vx{j} v USING (vec_id)
-        GROUP BY a.cluster, v.d
-      ) m ON m.cluster = p.cluster AND m.d = p.d
-    )"""
-        )
-    parts.append(
-        f"""dfin{j} AS (
-      SELECT v.vec_id, c.cluster,
-             round(sum((v.x - c.c) * (v.x - c.c)) * {s}.0) / {s}.0 AS d2
-      FROM vx{j} v JOIN c{j}_{n_iters} c USING (d)
-      GROUP BY v.vec_id, c.cluster
-    ),
-    afin{j} AS (
-      SELECT vec_id, cluster FROM (
-        SELECT vec_id, cluster,
-               row_number() OVER (PARTITION BY vec_id
-                                  ORDER BY d2 ASC, cluster ASC) AS rn
-        FROM dfin{j}
-      ) WHERE rn = 1
-    ),
-    qt{j} AS (
-      SELECT c.cluster,
-             round(sum((qx.x - c.c) * (qx.x - c.c)) * {s}.0) / {s}.0 AS t
-      FROM vx{j} qx
-      JOIN qv ON qx.vec_id = qv.qid
-      JOIN c{j}_{n_iters} c USING (d)
-      GROUP BY c.cluster
-    )"""
-    )
-    return ",\n    ".join(parts)
 
 
 _PQ_CTES = ",\n    ".join(
@@ -268,8 +154,3 @@ def embedding_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("rank")
     )
-
-
-# Twenty-ninth-batch entries register themselves into QUERIES/ORACLE
-# on import.
-from . import analytics_ext28  # noqa: E402,F401  isort:skip

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import local_frame
-from .analytics import _t, q
+from .registry import _hex_int_sql, _t, q
 
 # --- Bloom parameters -------------------------------------------------------
 _M_BITS = 4096  # 2^12 — three md5 nibbles address a bit exactly
@@ -32,13 +32,8 @@ _SALTS = tuple(f"bloom{i}:" for i in range(_H))
 
 def _pos_sql(expr: str, salt: str) -> str:
     """DuckDB: first 3 md5 nibbles of salt||expr as an INT in
-    [0, 4096) — one Bloom bit position (instr-nibble spelling shared
-    with ext26/operators/sampling.py; no mod, 3 nibbles ARE 12 bits)."""
-    h = f"md5('{salt}' || {expr})"
-    hv = lambda p: (  # noqa: E731
-        f"(instr('0123456789abcdef', substr({h}, {p}, 1)) - 1)"
-    )
-    return f"(({hv(1)} * 16 + {hv(2)}) * 16 + {hv(3)})"
+    [0, 4096) — one Bloom bit position (no mod, 3 nibbles ARE 12 bits)."""
+    return _hex_int_sql(f"md5('{salt}' || {expr})", 3)
 
 
 def _pos_col(col, salt: str):
@@ -341,8 +336,3 @@ def price_histogram_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("q")
     )
-
-
-# Thirtieth-batch entries register themselves into QUERIES/ORACLE
-# on import.
-from . import analytics_ext29  # noqa: E402,F401  isort:skip

@@ -19,48 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import local_frame
-from .analytics import _t, _t_wide, q
-
-_ROUNDS = 4
-
-
-def _merge_round_ctes(r: int) -> str:
-    """CTE block for merge round ``r``: in-row adjacent pairs of the
-    previous round's token lists, exact-integer counts, the (cnt DESC,
-    a ASC, b ASC) top-1, and the greedy left-fold rewrite (sentinel
-    [NULL] seed keeps the accumulator list-typed; ``acc[len(acc)]`` on
-    the sentinel is NULL, which never equals a real symbol — unlike
-    '', which string_split DOES emit for leading/double spaces
-    (ADVICE r4) — mirroring Spark's NULL-seeded ``F.aggregate``)."""
-    prev = r - 1
-    return f"""pr{r} AS (
-      SELECT unnest(list_zip(toks[1:len(toks)-1], toks[2:len(toks)])) AS z
-      FROM tok{prev}
-    ),
-    cnt{r} AS (
-      SELECT z[1] AS a, z[2] AS b, CAST(count(*) AS BIGINT) AS cnt
-      FROM pr{r} GROUP BY 1, 2
-    ),
-    top{r} AS (
-      SELECT a, b, cnt FROM cnt{r}
-      ORDER BY cnt DESC, a ASC, b ASC LIMIT 1
-    ),
-    tok{r} AS (
-      SELECT doc_id,
-             list_reduce([[NULL]] || list_transform(t.toks, s -> [s]),
-               (acc, x) -> CASE WHEN acc[len(acc)] = p.a AND x[1] = p.b
-                                THEN acc[1:len(acc)-1]
-                                     || [p.a || ' ' || p.b]
-                                ELSE acc || x END)[2:] AS toks
-      FROM tok{prev} t CROSS JOIN top{r} p
-    ),
-    tt{r} AS (SELECT CAST(sum(len(toks)) AS BIGINT) AS t FROM tok{r})"""
-
-
-_BPE_CTES = ",\n    ".join(
-    ["tok0 AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents)"]
-    + [_merge_round_ctes(r) for r in range(1, _ROUNDS + 1)]
-)
+from .registry import _BPE_CTES, _ROUNDS, _t, _t_wide, q
 
 _BPE_SELECT = "\n    UNION ALL\n    ".join(
     f"""SELECT {r} AS round, p.a || ' ' || p.b AS merged_pair,
@@ -233,8 +192,3 @@ def quantity_shape_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round((m4 / (m2 * m2) - F.lit(3.0)) * 1000000.0) / 1000000.0
         ).alias("excess_kurtosis"),
     ).orderBy("l_returnflag")
-
-
-# Thirty-first-batch entries register themselves into QUERIES/ORACLE
-# on import.
-from . import analytics_ext30  # noqa: E402,F401  isort:skip

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _t, q
+from .registry import _t, q
 
 
 @q(
@@ -392,7 +392,3 @@ def user_value_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("user_id")
     )
-
-
-# Fifth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext4  # noqa: E402,F401  isort:skip

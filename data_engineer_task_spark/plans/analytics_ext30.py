@@ -23,9 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .analytics import _t, q
-from .analytics_ext27 import _DSUB, _M, _PQ_K, _RT, _adc_col, _adc_table
-from .analytics_ext27 import _pq_subspace_ctes
+from .registry import _M, _PQ_K, _RT, _adc_col, _adc_table, _pq_subspace_ctes, _t, q
 
 _COARSE_K = 4  # coarse cells (seedq's LIMIT is shared with PQ's k)
 _COARSE_ITERS = 2
@@ -262,8 +260,3 @@ def embedding_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("rank")
     )
-
-
-# Thirty-second-batch entries register themselves into QUERIES/ORACLE
-# on import.
-from . import analytics_ext31  # noqa: E402,F401  isort:skip

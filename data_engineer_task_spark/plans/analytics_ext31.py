@@ -19,8 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _t, _t_wide, q
-from .analytics_ext26 import _md5_uint48_sql
+from .registry import _BPE_CTES, _ROUNDS, _hex_int_sql, _t, _t_wide, q
 
 # --- t-closeness -------------------------------------------------------------
 #
@@ -193,7 +192,7 @@ _RSV_K = 5
     f"""
     WITH h AS (
       SELECT event_type, event_id,
-             {_md5_uint48_sql("CAST(event_id AS VARCHAR)", "rsv:")} AS h
+             CAST({_hex_int_sql("md5('rsv:' || CAST(event_id AS VARCHAR))", 12)} AS BIGINT) AS h
       FROM events
     ),
     r AS (
@@ -399,8 +398,6 @@ def orders_custkey_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- BPE application (encode with the learned merges) -------------------------
 
-from .analytics_ext29 import _BPE_CTES, _ROUNDS  # noqa: E402
-
 
 @q(
     "doc_bpe_encode_lengths",
@@ -527,7 +524,3 @@ def doc_quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("bin")
     )
-
-
-# Next-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext32  # noqa: E402,F401  isort:skip

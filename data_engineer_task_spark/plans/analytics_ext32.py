@@ -25,60 +25,21 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .analytics import _SPLIT_BYTE, _STOP_SQL, _near_dup_tail, _t_wide, q
+from .registry import (
+    _CURATION_HEAD_SQL,
+    _MAX_ATL,
+    _MAX_PR,
+    _MAX_SWR,
+    _MAX_TOKENS,
+    _MIN_ATL,
+    _MIN_TOKENS,
+    _SPLIT_BYTE,
+    _near_dup_tail,
+    _t_wide,
+    q,
+)
 
-# Gate thresholds for the declared entry: the quality_gate operator
-# defaults (Gopher/C4-style first pass), which at the driver corpus
-# reject a meaningful slice (~45% at sf0.01) while leaving the
-# near-dup stage real work. The pipeline normalizes FIRST, so every
-# stat below is computed on the normalized text — mirrored exactly in
-# the oracle's `norm` CTE (lower → strip [.,!?;:] → collapse ws →
-# trim, all with DuckDB's 'g' flag: Spark regexp_replace is global).
-_MIN_TOKENS, _MAX_TOKENS = 30, 80
-_MIN_ATL, _MAX_ATL = 2.0, 12.0
-_MAX_SWR, _MAX_PR = 0.12, 0.2
 _NEAR_DUP_THRESHOLD = 0.6
-
-# Shared funnel head (normalize → gated stats → exact survivors):
-# spelled ONCE and composed by both curation oracles (this entry and
-# ext33's keep-best × segment-dedup variant), so a gate-spelling or
-# threshold change cannot silently decouple them (code-review r7).
-_CURATION_HEAD_SQL = f"""norm AS (
-      SELECT doc_id,
-             trim(regexp_replace(regexp_replace(lower(text), '[.,!?;:]', '', 'g'),
-                                 '\\s+', ' ', 'g')) AS nt
-      FROM documents
-    ),
-    stats AS (
-      -- token_stats on the NORMALIZED text, ratios display-rounded to
-      -- 4 dp BEFORE the threshold compare (the operator gates on its
-      -- rounded output columns — mirror or boundary docs flip).
-      SELECT doc_id, nt,
-             len(string_split(nt, ' ')) AS tc,
-             round(((length(nt) - (len(string_split(nt, ' ')) - 1))::DOUBLE
-                   / len(string_split(nt, ' '))) * 10000.0) / 10000.0 AS atl,
-             round((len(list_filter(string_split(nt, ' '), t -> t IN {_STOP_SQL}))::DOUBLE
-                   / len(string_split(nt, ' '))) * 10000.0) / 10000.0 AS swr,
-             round((CASE WHEN length(nt) > 0
-                         THEN len(regexp_extract_all(nt, '[.,!?;:]'))::DOUBLE
-                              / length(nt)
-                    END) * 10000.0) / 10000.0 AS pr
-      FROM norm
-    ),
-    gate AS (
-      -- NULL stats (NULL/empty text) route to REJECT, as the
-      -- pipeline's coalesce(passed, FALSE) does.
-      SELECT doc_id, nt,
-             coalesce(tc BETWEEN {_MIN_TOKENS} AND {_MAX_TOKENS}
-                      AND atl BETWEEN {_MIN_ATL} AND {_MAX_ATL}
-                      AND swr <= {_MAX_SWR} AND pr <= {_MAX_PR},
-                      FALSE) AS passed
-      FROM stats
-    ),
-    passed AS (SELECT doc_id, nt FROM gate WHERE passed),
-    hsurv AS (SELECT min(doc_id) AS doc_id FROM passed GROUP BY md5(nt)),
-    exact AS (SELECT doc_id, nt FROM passed
-              WHERE doc_id IN (SELECT doc_id FROM hsurv))"""
 
 _CURATION_SQL = f"""
     WITH RECURSIVE
@@ -153,7 +114,3 @@ def curation_pipeline_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pipe = CurationPipeline(spark, config=cfg)
     return pipe.classify(docs.select("doc_id", "text")).orderBy("doc_id")
-
-
-# Next-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext33  # noqa: E402,F401  isort:skip

@@ -24,8 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .analytics import _SPLIT_BYTE, _near_dup_tail, _t_wide, q
-from .analytics_ext32 import (
+from .registry import (
     _CURATION_HEAD_SQL,
     _MAX_ATL,
     _MAX_PR,
@@ -33,6 +32,10 @@ from .analytics_ext32 import (
     _MAX_TOKENS,
     _MIN_ATL,
     _MIN_TOKENS,
+    _SPLIT_BYTE,
+    _near_dup_tail,
+    _t_wide,
+    q,
 )
 
 _SEG = 10          # CurationConfig.segment_len default
@@ -204,7 +207,3 @@ def stream_running_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_stream_running_totals_once(
         spark, f"{sf_dir}/events.parquet", "stream_totals_out"
     )
-
-
-# Next-batch entries register on import (chained, keeps each file navigable).
-from . import analytics_ext34  # noqa: E402,F401  isort:skip

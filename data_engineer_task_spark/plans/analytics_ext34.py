@@ -24,66 +24,22 @@ from pyspark.sql import functions as F
 from ..operators.sketch import (
     _HLL_M,
     _HLL_NUM,
-    _HLL_RHO_MAX,
     _HLL_SMALL,
-    _HLL_W_NIBBLES,
     cms_build,
     cms_inner_product,
     hll_estimate,
     hll_sketch,
 )
-from .analytics import _t, q
-
-# --- DuckDB spelling of the HLL register/rho derivation ---------------------
-# Shares every constant with operators/sketch.py so the two sides are
-# the SAME algorithm: first md5 byte = register, rank of the next 48
-# bits from the hex string (anchored regexp strip of leading zero
-# nibbles + a 4-case first-nibble table), integer register fold.
-_NIB = "instr('0123456789abcdef', substr({s}, {p}, 1)) - 1"
-
-# the register index + leading-zero-stripped rank window, as select-list
-# fragments over a column named h (both HLL oracles build on these —
-# ONE spelling of the subtle rank derivation, so a future fix cannot
-# desynchronize the two declared oracles)
-_REG_EXPR = f"({_NIB.format(s='h', p=1)}) * 16 + ({_NIB.format(s='h', p=2)})"
-_T_EXPR = f"regexp_replace(substr(h, 3, {_HLL_W_NIBBLES}), '^0+', '')"
-_D = _NIB.format(s="t", p=1)
-_RHO_CASE = f"""CASE WHEN length(t) = 0 THEN {_HLL_RHO_MAX}
-                  ELSE ({_HLL_W_NIBBLES} - length(t)) * 4
-                       + CASE WHEN ({_D}) >= 8 THEN 0
-                              WHEN ({_D}) >= 4 THEN 1
-                              WHEN ({_D}) >= 2 THEN 2
-                              ELSE 3 END + 1 END"""
-
-
-def _fold_cte_sql(group: str, src: str) -> str:
-    """The exact-BIGINT harmonic fold over a (group, reg, mr) source:
-    SELECT body producing (group, n_registers, sum_int, v)."""
-    return f"""
-      SELECT {group},
-             CAST(count(*) AS BIGINT) AS n_registers,
-             sum(CAST(1 AS BIGINT) << ({_HLL_RHO_MAX} - mr))
-               + ({_HLL_M} - count(*))
-                 * (CAST(1 AS BIGINT) << {_HLL_RHO_MAX}) AS sum_int,
-             {_HLL_M} - count(*) AS v
-      FROM {src} GROUP BY {group}"""
-
-
-def _hll_sql(expr: str, group: str, table: str, where: str) -> str:
-    h = f"md5('hll:' || {expr})"
-    return f"""
-    hashed AS (
-      SELECT {group}, {_REG_EXPR} AS reg, {_T_EXPR} AS t
-      FROM (SELECT {group}, {h} AS h FROM {table} WHERE {where})
-    ),
-    rho AS (
-      SELECT {group}, reg, {_RHO_CASE} AS rho FROM hashed
-    ),
-    regs AS (
-      SELECT {group}, reg, max(rho) AS mr FROM rho GROUP BY {group}, reg
-    ),
-    folded AS ({_fold_cte_sql(group, "regs")}
-    )"""
+from .registry import (
+    _CMS_BUCKET,
+    _REG_EXPR,
+    _RHO_CASE,
+    _T_EXPR,
+    _fold_cte_sql,
+    _hll_sql,
+    _t,
+    q,
+)
 
 
 @q(
@@ -312,18 +268,14 @@ def orders_incremental_join_merge(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @q(
     "lineitem_selfjoin_size_cms",
-    """
+    f"""
     WITH vocab AS (
       SELECT CAST(l_partkey AS VARCHAR) AS token,
              CAST(count(*) AS BIGINT) AS w
       FROM lineitem GROUP BY 1
     ),
     cells AS (
-      SELECT j, (instr('0123456789abcdef',
-                       substr(md5('cms:' || CAST(j AS VARCHAR) || ':' || token), 1, 1)) - 1) * 16
-                + (instr('0123456789abcdef',
-                         substr(md5('cms:' || CAST(j AS VARCHAR) || ':' || token), 2, 1)) - 1)
-                AS bucket,
+      SELECT j, {_CMS_BUCKET.format(j="j", tok="token")} AS bucket,
              CAST(sum(w) AS BIGINT) AS c
       FROM vocab, (SELECT unnest(range(4)) AS j)
       GROUP BY 1, 2
@@ -509,7 +461,3 @@ def rolling_weekly_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("day")
     )
-
-
-# Next-batch entries register on import (chained, keeps each file navigable).
-from . import analytics_ext35  # noqa: E402,F401  isort:skip

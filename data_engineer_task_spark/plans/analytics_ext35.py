@@ -33,9 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketch import _HLL_M, _HLL_NUM, _HLL_SMALL
-from .analytics import _t, q
-from .analytics_ext26 import _K, _KMV_SCALE, _md5_uint48_sql
-from .analytics_ext34 import _hll_sql
+from .registry import _K, _KMV_SCALE, _hex_int_sql, _hll_sql, _t, q
 
 _N_SHARDS = 3
 
@@ -118,7 +116,7 @@ def _state_base() -> str:
       FROM events WHERE user_id IS NOT NULL
     ),
     khs AS (
-      SELECT DISTINCT event_type, {_md5_uint48_sql("v")} AS h FROM uv
+      SELECT DISTINCT event_type, CAST({_hex_int_sql("md5('kmv:' || v)", 12)} AS BIGINT) AS h FROM uv
     ),
     krk AS (
       SELECT event_type, h,
@@ -261,6 +259,3 @@ def sketch_rollup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-
-
-from . import analytics_ext36  # noqa: E402,F401  isort:skip

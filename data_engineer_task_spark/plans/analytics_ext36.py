@@ -24,21 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .analytics import _t_wide, q
-
-# DuckDB spelling of one md5-digest byte (1-based byte position p over
-# the 32-char hex string) — same parse the multimodal_decode oracle
-# uses, generalized to a lambda-bound position for list_transform.
-_BYTE_AT_P = (
-    "((instr('0123456789abcdef', substr(hx, 2 * p - 1, 1)) - 1) * 16"
-    " + (instr('0123456789abcdef', substr(hx, 2 * p, 1)) - 1))"
-)
-
-# first payload byte (hex chars 1-2) — drives the fake codec's format
-_B0 = (
-    "((instr('0123456789abcdef', substr(hx, 1, 1)) - 1) * 16"
-    " + (instr('0123456789abcdef', substr(hx, 2, 1)) - 1))"
-)
+from .registry import _hex_int_sql, _t_wide, q
 
 
 @q(
@@ -54,10 +40,10 @@ _B0 = (
              list_transform(generate_series(0, 7), k ->
                CAST(len(list_filter(
                  list_transform(generate_series(1, 16),
-                                p -> {_BYTE_AT_P} % 8),
+                                p -> {_hex_int_sql("hx", 2, "2 * p - 1")} % 8),
                  x -> x = k)) AS DOUBLE) / 16.0) AS v
       FROM h
-      WHERE {_B0} % 4 <> 3
+      WHERE {_hex_int_sql("hx", 2)} % 4 <> 3
     ),
     base AS (SELECT id, v, sqrt(list_dot_product(v, v)) AS nrm FROM feats),
     qv AS (SELECT * FROM base WHERE id < 40),
@@ -116,7 +102,3 @@ def multimodal_feature_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(
         kept, "id", "features", query_filter=F.col("id") < 40, k=3
     ).orderBy("query_id", F.desc_nulls_last("cos_sim"), F.asc("neighbor_id"))
-
-
-# Next-batch entries register on import (chained, keeps each file navigable).
-from . import analytics_ext37  # noqa: E402,F401  isort:skip

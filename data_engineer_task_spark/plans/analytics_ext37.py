@@ -25,14 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .analytics import _t_wide, q
-
-# last payload byte (hex chars 31-32) — drives the fake codec's
-# n_frames, same parse as the multimodal_decode oracle's b15
-_B15 = (
-    "((instr('0123456789abcdef', substr(hx, 31, 1)) - 1) * 16"
-    " + (instr('0123456789abcdef', substr(hx, 32, 1)) - 1))"
-)
+from .registry import _hex_int_sql, _t_wide, q
 
 _RESIZE_W, _RESIZE_H = 40, 40  # -> 40*40//64 = 25 bytes (non-multiple
 # of the 16-byte payload, so the cycle's truncation path is exercised)
@@ -42,7 +35,7 @@ _RESIZE_W, _RESIZE_H = 40, 40  # -> 40*40//64 = 25 bytes (non-multiple
     "multimodal_frame_sample",
     f"""
     WITH h AS (SELECT doc_id AS id, md5(text) AS hx FROM documents),
-    nf AS (SELECT id, hx, 1 + ({_B15}) % 8 AS n_frames FROM h),
+    nf AS (SELECT id, hx, 1 + {_hex_int_sql("hx", 2, 31)} % 8 AS n_frames FROM h),
     -- frame at index i = payload rotated left by i bytes (i < 16 so
     -- k = i), truncated to 8 bytes = hex rotated by 2i chars, first 16
     fr AS (
@@ -108,7 +101,3 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("media").cast("long").alias("byte_len"),
         F.lower(F.hex("media")).alias("resized_hex"),
     ).orderBy("id")
-
-
-# Next-batch entries register on import (chained, keeps each file navigable).
-from . import analytics_ext38  # noqa: E402,F401  isort:skip

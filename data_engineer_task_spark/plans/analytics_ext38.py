@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .analytics import _t_wide, q
+from .registry import _CMS_BUCKET, _t_wide, q
 
 
 def _be(col: Column, nbytes: int) -> Column:
@@ -190,14 +190,6 @@ def synth_header_media(docs: DataFrame) -> DataFrame:
     )
 
 
-_CMS_BUCKET = (
-    "(instr('0123456789abcdef',"
-    " substr(md5('cms:' || CAST({j} AS VARCHAR) || ':' || {tok}), 1, 1)) - 1) * 16"
-    " + (instr('0123456789abcdef',"
-    " substr(md5('cms:' || CAST({j} AS VARCHAR) || ':' || {tok}), 2, 1)) - 1)"
-)
-
-
 @q(
     "doc_token_cms_sharded_merge",
     f"""
@@ -273,6 +265,3 @@ def doc_token_cms_sharded_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cms_estimate(merged, panel, "token", depth=4).orderBy(
         F.desc("true_cnt"), F.asc("token")
     )
-
-
-from . import analytics_ext39  # noqa: E402,F401  isort:skip

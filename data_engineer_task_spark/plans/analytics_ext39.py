@@ -29,8 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .analytics import _t_wide, q
-from .analytics_ext38 import _CMS_BUCKET
+from .registry import _CMS_BUCKET, _SEG, _SEGMENT_CTE, _t_wide, q
 
 
 @q(
@@ -115,9 +114,6 @@ def doc_token_cms_mixed_depth_merge(
     return cms_estimate(merged, panel, "token", depth=None).orderBy(
         F.desc("true_cnt"), F.asc("token")
     )
-
-
-from .analytics_ext21 import _SEG, _SEGMENT_CTE  # noqa: E402  isort:skip
 
 
 @q(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _SHINGLE_CTE, _t, _t_wide, q
+from .registry import _SHINGLE_CTE, _t, _t_wide, q
 
 
 @q(
@@ -213,7 +213,3 @@ def order_price_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("digit")
     )
-
-
-# Sixth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext5  # noqa: E402,F401  isort:skip

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .analytics import _t, _t_wide, q
+from .registry import _hex_int_sql, _t, _t_wide, q
 
 
 @q(
@@ -526,20 +526,6 @@ def lang_target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def _md5_hex_int_sql(expr: str, salt: str, n_hex: int) -> str:
-    """DuckDB spelling of conv(substr(md5(salt||expr),1,n_hex),16,10):
-    positional nibble arithmetic over the md5 hex prefix (DuckDB has no
-    base-16 string→int conversion; instr over the hex alphabet is the
-    same engine-portable trick as analytics._md5_byte_sql)."""
-    h = f"md5('{salt}' || {expr})"
-    terms = " + ".join(
-        f"(instr('0123456789abcdef', substr({h}, {i + 1}, 1)) - 1)"
-        f" * {16 ** (n_hex - 1 - i)}"
-        for i in range(n_hex)
-    )
-    return f"({terms})"
-
-
 _ROW_STR = (
     "CAST(o_orderkey AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR)"
     " || '|' || o_orderstatus || '|' || o_orderpriority"
@@ -551,7 +537,7 @@ _ROW_STR = (
     f"""
     SELECT strftime(o_orderdate, '%Y-%m') AS month,
            CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum({_md5_hex_int_sql(_ROW_STR, "ck:", 8)}) AS BIGINT)
+           CAST(sum({_hex_int_sql(f"md5('ck:' || {_ROW_STR})", 8)}) AS BIGINT)
              AS checksum
     FROM orders GROUP BY strftime(o_orderdate, '%Y-%m')
     ORDER BY month
@@ -655,7 +641,6 @@ def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank_col=None,
         sums={"_before": "cents"},
         buckets=32,
-        materialize=False,
     )
     cum = F.col("_before") + F.col("cents")
     k = pre.crossJoin(F.broadcast(tot)).select(
@@ -682,7 +667,3 @@ def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("abc_class")
     )
-
-
-# Seventh-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext6  # noqa: E402,F401  isort:skip

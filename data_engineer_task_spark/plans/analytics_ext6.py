@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _t, q
+from .registry import _t, q
 
 
 @q(
@@ -163,7 +163,3 @@ def lang_source_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang", "source")
     )
-
-
-# Eighth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext7  # noqa: E402,F401  isort:skip

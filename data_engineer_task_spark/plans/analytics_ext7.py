@@ -24,19 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.sampling import _md5_byte0, _md5_uint16
-from .analytics import _md5_byte_sql, _t, _t_wide, q
+from .registry import _hex_int_sql, _t, _t_wide, q
 from ..sources.catalog import gated_broadcast
-
-
-def _md5_u16_sql(expr: str, salt: str) -> str:
-    """DuckDB spelling of sampling._md5_uint16(col, salt): first two
-    md5 bytes (0..65535) of salt + expr."""
-    h = f"md5('{salt}' || {expr})"
-
-    def hv(p: int) -> str:
-        return f"(instr('0123456789abcdef', substr({h}, {p}, 1)) - 1)"
-
-    return f"((({hv(1)} * 16 + {hv(2)}) * 16 + {hv(3)}) * 16 + {hv(4)})"
 
 
 @q(
@@ -221,7 +210,7 @@ def event_value_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
     WITH u AS (
       SELECT user_id,
-             CASE WHEN ({_md5_byte_sql("CAST(user_id AS VARCHAR)", "ab:")}) % 2 = 0
+             CASE WHEN {_hex_int_sql("md5('ab:' || CAST(user_id AS VARCHAR))", 2)} % 2 = 0
                   THEN 'A' ELSE 'B' END AS variant,
              max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
       FROM events GROUP BY user_id
@@ -487,7 +476,8 @@ _GRID_R = 4.0  # degrees; cell size == radius so 3×3 neighborhood suffices
 
 
 def _coord_sql(key: str, salt: str, span: float, off: float) -> str:
-    return f"({_md5_u16_sql(key, salt)} / 65536.0 * {span} - {off})"
+    u16 = _hex_int_sql(f"md5('{salt}' || {key})", 4)
+    return f"({u16} / 65536.0 * {span} - {off})"
 
 
 @q(
@@ -581,7 +571,3 @@ def customer_supplier_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("c_custkey", "s_suppkey")
     )
-
-
-# Ninth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext8  # noqa: E402,F401  isort:skip

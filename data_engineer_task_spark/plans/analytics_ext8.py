@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from .analytics import _t, _t_wide, q
+from .registry import _t, _t_wide, q
 from ..sources.catalog import gated_broadcast
 
 
@@ -598,7 +598,3 @@ def brand_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("brand")
     )
-
-
-# Tenth-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext9  # noqa: E402,F401  isort:skip

@@ -20,9 +20,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..operators.sampling import _md5_uint16
-from .analytics import _t, q
+from .registry import _hex_int_sql, _t, q
 from ..sources.catalog import gated_broadcast
-from .analytics_ext7 import _md5_u16_sql
 
 
 @q(
@@ -267,7 +266,7 @@ def order_acctbal_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt AS (SELECT count(*) AS n FROM d),
     anchors AS (
       SELECT d.doc_id, d.lang, d.rn, k.k,
-             (d.rn + ({_md5_u16_sql("CAST(doc_id AS VARCHAR) || ':' || CAST(k.k AS VARCHAR)", "neg:")})
+             (d.rn + ({_hex_int_sql("md5('neg:' || CAST(doc_id AS VARCHAR) || ':' || CAST(k.k AS VARCHAR))", 4)})
                       % (cnt.n - 1) + 1) % cnt.n AS neg_rn
       FROM d CROSS JOIN cnt CROSS JOIN (VALUES (1), (2)) k(k)
     )
@@ -398,7 +397,3 @@ def nation_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("region", "nation")
     )
-
-
-# Eleventh-batch entries register themselves into QUERIES/ORACLE on import.
-from . import analytics_ext10  # noqa: E402,F401  isort:skip

@@ -329,7 +329,7 @@ def test_connected_components_chain_and_islands(spark):
     # driver union-find path (edge list under the threshold)
     out = {r["node"]: r["cluster"] for r in connected_components(edges).collect()}
     assert out == expected
-    # distributed propagation path must produce the identical fixpoint
+    # distributed two-phase path must produce the identical fixpoint
     out_dist = {
         r["node"]: r["cluster"]
         for r in connected_components(edges, driver_threshold=0).collect()

@@ -89,8 +89,8 @@ def _embeddings(spark, n: int, d: int = 32):
 def _edges(spark, n: int):
     """Mixed component structure: 80% pseudo-random edges over a node
     universe of n/2 (creates big merged components), 20% long chains
-    (worst case for plain propagation, the two-phase escalation's
-    reason to exist)."""
+    (worst case for plain min-label propagation, the two-phase
+    path's reason to exist)."""
     base = spark.range(n)
     nodes = F.lit(max(n // 2, 2))
     u = F.pmod(F.hash(F.col("id") * 7 + 1), nodes)
@@ -167,7 +167,7 @@ def fam_multimodal_topk(spark, n):
 def fam_two_phase_cc(spark, n):
     from data_engineer_task_spark.operators.graph import connected_components
 
-    return connected_components(_edges(spark, n), strategy="two_phase")
+    return connected_components(_edges(spark, n), driver_threshold=0)
 
 
 def fam_ivf_pq(spark, n):
